@@ -99,7 +99,7 @@ def connected_components(
     max_iters: int = 50,
     algorithm: str = "star",
     stats: dict | None = None,
-    small_graph_max_edges: int = CC_SMALL_GRAPH_MAX_EDGES,
+    small_graph_max_edges: int | None = None,
 ) -> DataFrame:
     """(id, component_id) for every node: component_id = min node id
     reachable through ``edges`` (undirected; pass each pair once).
@@ -116,7 +116,13 @@ def connected_components(
     ``stats`` (optional dict) is filled with ``{"rounds": n, "algorithm":
     ...}`` — observability for the no-silent-iteration rule and the
     round-count assertions in tests.
+
+    ``small_graph_max_edges`` (star only) is the driver cutover bound;
+    ``None`` reads ``CC_SMALL_GRAPH_MAX_EDGES`` at call time and ``0``
+    disables the cutover.
     """
+    if small_graph_max_edges is None:
+        small_graph_max_edges = CC_SMALL_GRAPH_MAX_EDGES
     if algorithm == "star":
         return _cc_star(
             nodes, edges, id_col, src_col, dst_col, max_iters, stats,
@@ -187,7 +193,7 @@ def _cc_star(
     dst_col: str,
     max_iters: int,
     stats: dict | None,
-    small_graph_max_edges: int = CC_SMALL_GRAPH_MAX_EDGES,
+    small_graph_max_edges: int,
 ) -> DataFrame:
     e = (
         edges.select(

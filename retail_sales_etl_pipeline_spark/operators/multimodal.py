@@ -4,7 +4,7 @@ Treats image/audio/video as what they are to the relational layer: a
 ``binary`` column plus metadata columns, processed by Arrow-batched
 Pandas functions (`mapInPandas`). The Spark-side machinery — schema,
 Arrow batch shape, partition-parallel feature extraction, deterministic
-outputs — is real and tested. Media decode is REAL, pure stdlib:
+outputs — is real and tested. Media decode is REAL, stdlib plus numpy:
 ``audio/wav`` (RIFF/PCM16 via the ``wave`` parser), ``image/bmp``
 (24-bit BI_RGB with row padding and bottom-up row order undone) and
 ``image/png`` (zlib-inflated scanlines with full five-filter
@@ -24,11 +24,25 @@ narrow map — no shuffle.
 
 from __future__ import annotations
 
+import io
+import math
+import struct
+import sys
+import wave
+import zlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Every Arrow batch function below calls this module's codecs. Pickling
+# the module by value ships those codecs with the function, so workers
+# decode without this package on their import path (a driver started
+# from any working directory).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 FEATURE_SCHEMA = (
     "doc_id long, mime string, n_bytes long, header_hex string, "
@@ -57,10 +71,6 @@ def decode_wav(payload: bytes) -> tuple[int, list[int]]:
     Only uncompressed PCM is supported — exactly what the stdlib parser
     handles; compressed codecs stay behind ``decode_media``'s
     NotImplementedError."""
-    import io
-    import struct
-    import wave
-
     with wave.open(io.BytesIO(payload), "rb") as w:
         if w.getsampwidth() != 2 or w.getnchannels() != 1:
             raise ValueError("only PCM16 mono supported")
@@ -68,6 +78,18 @@ def decode_wav(payload: bytes) -> tuple[int, list[int]]:
         rate = w.getframerate()
         frames = w.readframes(n)
     return rate, list(struct.unpack(f"<{n}h", frames))
+
+
+def encode_wav(samples: list[int], rate: int) -> bytes:
+    """PCM16 mono RIFF/WAVE container around ``samples`` (the inverse of
+    ``decode_wav``)."""
+    data = struct.pack(f"<{len(samples)}h", *samples)
+    return (
+        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
+        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, rate, 2 * rate, 2, 16)
+        + b"data" + struct.pack("<I", len(data))
+        + data
+    )
 
 
 def decode_bmp(payload: bytes) -> tuple[int, int, bytes]:
@@ -79,8 +101,6 @@ def decode_bmp(payload: bytes) -> tuple[int, int, bytes]:
     This undoes genuine container structure (padding + row inversion);
     a decoder that just sliced the payload would produce wrong bytes for
     any width not divisible by 4."""
-    import struct
-
     if payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
     (offset,) = struct.unpack_from("<I", payload, 10)
@@ -95,6 +115,24 @@ def decode_bmp(payload: bytes) -> tuple[int, int, bytes]:
         start = offset + (height - 1 - y) * row_size
         out += payload[start : start + width * 3]
     return width, height, bytes(out)
+
+
+def encode_bmp(width: int, height: int, logical: bytes) -> bytes:
+    """24-bit BI_RGB BMP around top-down row-major ``logical`` pixels:
+    rows stored bottom-up, each padded to 4 bytes (the inverse of
+    ``decode_bmp``)."""
+    row_size = (width * 3 + 3) // 4 * 4
+    pad = b"\x00" * (row_size - width * 3)
+    body = b"".join(
+        logical[y * width * 3 : (y + 1) * width * 3] + pad
+        for y in range(height - 1, -1, -1)
+    )
+    return (
+        b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
+        + struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0,
+                      len(body), 2835, 2835, 0, 0)
+        + body
+    )
 
 
 def _paeth(a: int, b: int, c: int) -> int:
@@ -119,9 +157,6 @@ def decode_png(payload: bytes) -> tuple[int, int, int, bytes]:
     Supports the mainstream still-image profile: 8-bit depth, grayscale
     (color type 0) or truecolor RGB (type 2), non-interlaced. Anything
     else raises ValueError — a wrong answer is worse than no answer."""
-    import struct
-    import zlib
-
     if payload[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG payload")
     pos, width = 8, None
@@ -197,9 +232,6 @@ def encode_png(
     type chosen by ``filter_for_row`` — the synthetic corpus cycles all
     five types, so decode round-trip proofs exercise Sub/Up/Average/Paeth
     unfiltering, not just the trivial None path."""
-    import struct
-    import zlib
-
     bpp = 3 if color == 2 else 1
     stride = width * bpp
     assert len(logical) == stride * height
@@ -241,17 +273,19 @@ def encode_png(
     )
 
 
-# --- baseline JPEG (ITU T.81) codec, pure stdlib -------------------------
+# --- baseline JPEG (ITU T.81) codec --------------------------------------
 # Round-12 closure of the last image-codec gate: a genuine baseline
 # sequential JPEG decoder (marker walk, DQT/DHT table parsing, Huffman
 # entropy decode with byte-unstuffing, DC prediction, dequantize,
 # inverse zigzag, float IDCT, level shift, JFIF YCbCr->RGB) plus the
 # matching encoder (forward DCT, quantize, zigzag, run-length + Huffman
 # with the T.81 Annex K standard tables) used by tests and the q272
-# synthetic corpus. Supported profile: 8-bit baseline sequential
-# (SOF0), 1 component (grayscale) or 3 components 4:4:4 (no chroma
-# subsampling), no restart markers; anything else raises ValueError —
-# a wrong answer is worse than no answer.
+# synthetic corpus. The bitstream work is sequential Python; the
+# transforms run in numpy over whole blocks. Supported profile: 8-bit
+# baseline sequential (SOF0), 1 component (grayscale) or 3 components
+# 4:4:4 (no chroma subsampling) in one interleaved scan, no restart
+# markers; anything else raises ValueError — a wrong answer is worse
+# than no answer.
 
 # zigzag index -> raster index (T.81 figure A.6)
 JPEG_ZIGZAG = [
@@ -292,6 +326,15 @@ JPEG_STD_AC_VALS = [
 JPEG_Q_DC = 8
 JPEG_Q_AC = 16
 
+# _JPEG_COS[u, x] = cos((2x+1) u pi / 16), _JPEG_CU[u] = C(u); the
+# forward-DCT basis is their product, S = 0.25 * M B M^T
+_JPEG_COS = np.array(
+    [[math.cos((2 * x + 1) * u * math.pi / 16) for x in range(8)]
+     for u in range(8)]
+)
+_JPEG_CU = np.array([1 / math.sqrt(2)] + [1.0] * 7)
+_JPEG_DCT = _JPEG_CU[:, None] * _JPEG_COS
+
 
 def _jpeg_canonical_codes(bits: list[int], vals: list[int]) -> dict:
     """symbol -> (code, length) canonical Huffman assignment (T.81 C.2)."""
@@ -305,36 +348,21 @@ def _jpeg_canonical_codes(bits: list[int], vals: list[int]) -> dict:
     return out
 
 
-def _jpeg_cos_tables() -> tuple[list[list[float]], list[float]]:
-    import math
-
-    cos = [
-        [math.cos((2 * x + 1) * u * math.pi / 16) for x in range(8)]
-        for u in range(8)
-    ]
-    cu = [1 / math.sqrt(2)] + [1.0] * 7
-    return cos, cu
-
-
 def encode_jpeg_baseline(
     width: int, height: int, planes: list[bytes]
 ) -> bytes:
-    """Genuine baseline sequential JPEG encoder, pure stdlib: per-block
-    level shift -> float forward DCT -> quantize (flat table, DC step
-    {JPEG_Q_DC} / AC step {JPEG_Q_AC}) -> zigzag -> differential-DC +
-    run-length AC -> Huffman (T.81 Annex K standard tables) with byte
-    stuffing. ``planes``: [gray] or [Y, Cb, Cr] (4:4:4), each
-    width*height bytes; edge blocks replicate the last row/column. The
-    tables are written into DQT/DHT, so any conforming decoder reads
-    them from the stream."""
-    import math
-    import struct
-
+    """Genuine baseline sequential JPEG encoder: per-block level shift ->
+    float forward DCT (numpy, 0.25 * M B M^T) -> quantize (flat table,
+    DC step {JPEG_Q_DC} / AC step {JPEG_Q_AC}, half-up) -> zigzag ->
+    differential-DC + run-length AC -> Huffman (T.81 Annex K standard
+    tables) with byte stuffing. ``planes``: [gray] or [Y, Cb, Cr]
+    (4:4:4), each width*height bytes; edge blocks replicate the last
+    row/column. The tables are written into DQT/DHT, so any conforming
+    decoder reads them from the stream."""
     n_comp = len(planes)
     if n_comp not in (1, 3):
         raise ValueError("encoder supports 1 (gray) or 3 (YCbCr) planes")
-    cos, cu = _jpeg_cos_tables()
-    qtab = [JPEG_Q_AC] * 64
+    qtab = np.full(64, JPEG_Q_AC, dtype=np.float64)
     qtab[0] = JPEG_Q_DC
     dc_codes = _jpeg_canonical_codes(JPEG_STD_DC_BITS, JPEG_STD_DC_VALS)
     ac_codes = _jpeg_canonical_codes(JPEG_STD_AC_BITS, JPEG_STD_AC_VALS)
@@ -364,21 +392,12 @@ def encode_jpeg_baseline(
             s += 1
         return s, (v if v >= 0 else v + (1 << s) - 1)
 
-    def block_at(plane: bytes, bx: int, by: int) -> list[int]:
-        b = []
-        for y in range(8):
-            sy = min(by * 8 + y, height - 1)
-            for x in range(8):
-                sx = min(bx * 8 + x, width - 1)
-                b.append(plane[sy * width + sx])
-        return b
-
     # headers
     hdr = bytearray(b"\xff\xd8")  # SOI
     # APP0/JFIF: version 1.1, no density units, 1x1 density, no thumbnail
     hdr += b"\xff\xe0" + struct.pack(">H", 16) \
         + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    zz_q = bytes(qtab[JPEG_ZIGZAG[i]] for i in range(64))
+    zz_q = bytes(int(qtab[JPEG_ZIGZAG[i]]) for i in range(64))
     hdr += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + zz_q
     hdr += b"\xff\xc0" + struct.pack(">HB", 8 + 3 * n_comp, 8)
     hdr += struct.pack(">HH", height, width) + bytes([n_comp])
@@ -398,24 +417,20 @@ def encode_jpeg_baseline(
     bw = (width + 7) // 8
     bh = (height + 7) // 8
     pred = [0] * n_comp
+    arrs = [
+        np.frombuffer(p, dtype=np.uint8).reshape(height, width)
+        for p in planes
+    ]
     for by in range(bh):
+        ys = np.minimum(np.arange(by * 8, by * 8 + 8), height - 1)
         for bx in range(bw):
+            xs = np.minimum(np.arange(bx * 8, bx * 8 + 8), width - 1)
             for c in range(n_comp):
-                blk = block_at(planes[c], bx, by)
+                blk = arrs[c][np.ix_(ys, xs)].astype(np.float64) - 128.0
                 # forward DCT + quantize, zigzag order
-                coefs = [0] * 64
-                for v in range(8):
-                    for u in range(8):
-                        s = 0.0
-                        for y in range(8):
-                            for x in range(8):
-                                s += (blk[y * 8 + x] - 128) \
-                                    * cos[u][x] * cos[v][y]
-                        s *= 0.25 * cu[u] * cu[v]
-                        coefs[v * 8 + u] = int(
-                            math.floor(s / qtab[v * 8 + u] + 0.5)
-                        )
-                zz = [coefs[JPEG_ZIGZAG[i]] for i in range(64)]
+                S = 0.25 * (_JPEG_DCT @ blk @ _JPEG_DCT.T)
+                coefs = np.floor(S.reshape(64) / qtab + 0.5).astype(np.int64)
+                zz = [int(coefs[JPEG_ZIGZAG[i]]) for i in range(64)]
                 diff = zz[0] - pred[c]
                 pred[c] = zz[0]
                 s, vb = magnitude(diff)
@@ -450,19 +465,19 @@ def encode_jpeg_baseline(
 
 
 def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
-    """REAL baseline JPEG decode, pure stdlib: marker walk (SOI/APP/
-    DQT/SOF0/DHT/SOS), Huffman tables and quant tables read FROM THE
-    STREAM, entropy decode with byte-unstuffing, DC prediction + EXTEND,
-    dequantize, inverse zigzag, float IDCT, level shift + clamp, and for
-    3-component scans the JFIF YCbCr->RGB transform. Returns (width,
-    height, n_components, pixels) — gray bytes or interleaved RGB,
-    top-down row-major, edge-padded MCUs cropped to the declared size.
+    """REAL baseline JPEG decode: marker walk (SOI/APP/DQT/SOF0/DHT/SOS),
+    Huffman tables and quant tables read FROM THE STREAM, entropy decode
+    with byte-unstuffing, DC prediction + EXTEND, then dequantize,
+    inverse zigzag, float IDCT, level shift + clamp and, for
+    3-component scans, the JFIF YCbCr->RGB transform — in numpy over all
+    blocks of a component. Returns (width, height, n_components,
+    pixels) — gray bytes or interleaved RGB, top-down row-major,
+    edge-padded MCUs cropped to the declared size.
 
     Supported profile: SOF0 baseline sequential, 8-bit, 1 or 3
-    components with 1x1 sampling (4:4:4), 8-bit quant tables, no
-    restart intervals. Anything else raises ValueError."""
-    import struct
-
+    components with 1x1 sampling (4:4:4) in a single interleaved scan,
+    8-bit quant tables, no restart intervals. Anything else raises
+    ValueError."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload (missing SOI)")
     pos = 2
@@ -530,7 +545,13 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
             if ri != 0:
                 raise ValueError("restart intervals unsupported")
         elif marker == 0xDA:  # SOS
+            if width is None:
+                raise ValueError("JPEG missing SOF0/SOS")
             ns = seg[0]
+            if ns != len(comps):
+                # legal baseline, but components split over several
+                # scans; only the single interleaved scan is decoded
+                raise ValueError("multi-scan baseline unsupported")
             for c in range(ns):
                 cs, tt = seg[1 + 2 * c], seg[2 + 2 * c]
                 idx = next(
@@ -543,7 +564,6 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
     if width is None or data_start is None:
         raise ValueError("JPEG missing SOF0/SOS")
 
-    cos, cu = _jpeg_cos_tables()
     # bit reader over entropy-coded data with 0xFF00 unstuffing
     bpos, bitcnt, bitbuf = data_start, 0, 0
 
@@ -585,15 +605,19 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
 
     nc = len(comps)
     bw, bh = (width + 7) // 8, (height + 7) // 8
-    planes = [bytearray(bw * 8 * bh * 8) for _ in range(nc)]
+    # Entropy decode is sequential (a Huffman bitstream has no batch
+    # form) and only COLLECTS each block's zigzag coefficient vector;
+    # dequant, inverse zigzag, IDCT and level shift run vectorized over
+    # all blocks of a component below.
+    comp_zz: list[list[list[int]]] = [[] for _ in range(nc)]
     pred = [0] * nc
-    for by in range(bh):
-        for bx in range(bw):
+    for _by in range(bh):
+        for _bx in range(bw):
             for ci, dc_id, ac_id in scan_comps:
                 dct = htabs.get((0, dc_id))
                 act = htabs.get((1, ac_id))
-                qt = qtabs.get(comps[ci][2])
-                if dct is None or act is None or qt is None:
+                if dct is None or act is None \
+                        or qtabs.get(comps[ci][2]) is None:
                     raise ValueError("JPEG missing Huffman/quant table")
                 zz = [0] * 64
                 s = huff_decode(dct)
@@ -613,51 +637,55 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
                         raise ValueError("AC coefficient index overflow")
                     zz[i] = receive_extend(size)
                     i += 1
-                coefs = [0] * 64
-                for i in range(64):
-                    coefs[JPEG_ZIGZAG[i]] = zz[i] * qt[JPEG_ZIGZAG[i]]
-                # IDCT
-                plane = planes[ci]
-                stride = bw * 8
-                for y in range(8):
-                    for x in range(8):
-                        s2 = 0.0
-                        for v in range(8):
-                            for u in range(8):
-                                cuv = coefs[v * 8 + u]
-                                if cuv:
-                                    s2 += cu[u] * cu[v] * cuv \
-                                        * cos[u][x] * cos[v][y]
-                        # floor(x+0.5): deterministic half-up, pinned
-                        # identical in the inline Arrow copy
-                        val = int((0.25 * s2) + 0.5 + 1024) - 1024 + 128
-                        plane[(by * 8 + y) * stride + bx * 8 + x] = (
-                            0 if val < 0 else 255 if val > 255 else val
-                        )
-    stride = bw * 8
-    if nc == 1:
-        out = bytearray(width * height)
-        for y in range(height):
-            out[y * width : (y + 1) * width] = (
-                planes[0][y * stride : y * stride + width]
-            )
-        return width, height, 1, bytes(out)
-    out = bytearray(width * height * 3)
-    for y in range(height):
-        for x in range(width):
-            yy = planes[0][y * stride + x]
-            cb = planes[1][y * stride + x] - 128
-            cr = planes[2][y * stride + x] - 128
-            # same floor(x+0.5) convention as the IDCT output
-            r = int(yy + 1.402 * cr + 0.5 + 1024) - 1024
-            g = int(yy - 0.344136 * cb - 0.714136 * cr + 0.5 + 1024) - 1024
-            b = int(yy + 1.772 * cb + 0.5 + 1024) - 1024
-            o = (y * width + x) * 3
-            out[o] = 0 if r < 0 else 255 if r > 255 else r
-            out[o + 1] = 0 if g < 0 else 255 if g > 255 else g
-            out[o + 2] = 0 if b < 0 else 255 if b > 255 else b
-    return width, height, 3, bytes(out)
+                comp_zz[ci].append(zz)
 
+    zz_nat = np.array(JPEG_ZIGZAG, dtype=np.int64)  # zigzag -> natural
+    planes = []
+    for ci in range(nc):
+        qt_nat = np.array(qtabs[comps[ci][2]], dtype=np.int64)
+        zz_arr = np.array(comp_zz[ci], dtype=np.int64).reshape(-1, 64)
+        n_blk = zz_arr.shape[0]
+        # coefs[ZZ[i]] = zz[i] * qt[ZZ[i]] — integer, exact
+        coefs = np.zeros((n_blk, 64), dtype=np.float64)
+        coefs[:, zz_nat] = (zz_arr * qt_nat[zz_nat][None, :]).astype(
+            np.float64
+        )
+        # IDCT: accumulate the 64 (v, u) terms in raster order with
+        # element-wise ops only, each product left-associated as
+        # (C(u) C(v) F(u,v)) cos_u(x) cos_v(y); a position that is zero
+        # in every block adds exactly +-0.0 and is skipped. No
+        # matmul/einsum: their reassociation could flip a floor(x + 0.5)
+        # boundary pixel against the reference arithmetic.
+        acc = np.zeros((n_blk, 8, 8), dtype=np.float64)
+        for idx in np.flatnonzero(coefs.any(axis=0)):
+            v, u = divmod(int(idx), 8)
+            t = (_JPEG_CU[u] * _JPEG_CU[v]) * coefs[:, idx]
+            t = t[:, None, None] * _JPEG_COS[u][None, None, :]
+            t = t * _JPEG_COS[v][None, :, None]
+            acc += t
+        # floor(x + 0.5): deterministic half-up
+        valp = np.floor((0.25 * acc) + 0.5 + 1024.0).astype(
+            np.int64
+        ) - 1024 + 128
+        blocks = np.clip(valp, 0, 255).astype(np.uint8)
+        planes.append(
+            blocks.reshape(bh, bw, 8, 8)
+            .transpose(0, 2, 1, 3)
+            .reshape(bh * 8, bw * 8)
+        )
+    if nc == 1:
+        return width, height, 1, planes[0][:height, :width].tobytes()
+    # YCbCr -> RGB, same floor(x + 0.5) convention as the IDCT output
+    yy = planes[0][:height, :width].astype(np.float64)
+    cb = planes[1][:height, :width].astype(np.float64) - 128.0
+    cr = planes[2][:height, :width].astype(np.float64) - 128.0
+    r = np.floor((yy + (1.402 * cr)) + 0.5 + 1024.0) - 1024.0
+    g = np.floor(
+        ((yy - (0.344136 * cb)) - (0.714136 * cr)) + 0.5 + 1024.0
+    ) - 1024.0
+    b = np.floor((yy + (1.772 * cb)) + 0.5 + 1024.0) - 1024.0
+    rgb = np.clip(np.stack((r, g, b), axis=-1), 0.0, 255.0).astype(np.uint8)
+    return width, height, 3, rgb.tobytes()
 
 def decode_media(payload: bytes, mime: str):
     """Decode a media payload into samples/pixels.
@@ -749,26 +777,13 @@ def frame_sample(
 
 
 def extract_features(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    The batch function is fully self-contained (no references to this
-    module's globals): cloudpickle ships nested functions by value, so
-    worker Python processes need no import of this package — required
-    when the driver runs from an arbitrary working directory.
-    """
+    """Arrow-batched feature extraction over binary payloads."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def fake_decode(payload: bytes) -> dict:
-            return {
-                "n_bytes": len(payload),
-                "header_hex": payload[:4].hex().upper(),
-                "fake_tokens": len(payload) // 4,
-            }
-
         for pdf in batches:
             if pdf.empty:
                 continue
-            feats = [fake_decode(bytes(p)) for p in pdf["payload"]]
+            feats = [_fake_decode(bytes(p)) for p in pdf["payload"]]
             out = pd.DataFrame(feats)
             out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
             out.insert(1, "mime", pdf["mime"].to_numpy())
@@ -843,53 +858,22 @@ MEDIA_P1, MEDIA_P2 = 100_003, 104_729
 WAV_RATE = 8_000
 
 
+def media_lcg_value(doc_id: int, i: int, mod: int) -> int:
+    """Seeded value ``i`` of document ``doc_id`` in ``[0, mod)`` — the
+    formula the q156/q159/q265/q272 oracles recompute in SQL."""
+    return (
+        MEDIA_LCG_A * ((doc_id * MEDIA_P1 + i * MEDIA_P2) % MEDIA_LCG_M)
+        + MEDIA_LCG_B
+    ) % mod
+
+
 def synth_media_payloads(docs: DataFrame) -> DataFrame:
     """Deterministic media ingestion source: even doc_ids get a PCM16
     mono WAV (200 + doc_id%57 samples), odd doc_ids a 24-bit BMP
     ((8 + doc_id%9) x (6 + doc_id%7)) — real container bytes built with
-    struct, not placeholders. Self-contained batch fn (cwd-independent
-    workers)."""
+    struct, not placeholders."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        A, B, M = 1_103_515_245, 12_345, 1_000_003
-        P1, P2 = 100_003, 104_729
-
-        def val(doc_id: int, i: int, mod: int) -> int:
-            return (A * ((doc_id * P1 + i * P2) % M) + B) % mod
-
-        def wav_bytes(doc_id: int) -> bytes:
-            n = 200 + doc_id % 57
-            samples = [val(doc_id, k, 65536) - 32768 for k in range(n)]
-            data = struct.pack(f"<{n}h", *samples)
-            hdr = (
-                b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000,
-                                        16000, 2, 16)
-                + b"data" + struct.pack("<I", len(data))
-            )
-            return hdr + data
-
-        def bmp_bytes(doc_id: int) -> bytes:
-            w, h = 8 + doc_id % 9, 6 + doc_id % 7
-            logical = bytes(
-                val(doc_id, i, 256) for i in range(w * h * 3)
-            )
-            row_size = (w * 3 + 3) // 4 * 4
-            pad = b"\x00" * (row_size - w * 3)
-            # stored bottom-up, each row padded to 4 bytes
-            body = b"".join(
-                logical[y * w * 3 : (y + 1) * w * 3] + pad
-                for y in range(h - 1, -1, -1)
-            )
-            hdr = (
-                b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-                + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
-                              len(body), 2835, 2835, 0, 0)
-            )
-            return hdr + body
-
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -897,11 +881,19 @@ def synth_media_payloads(docs: DataFrame) -> DataFrame:
             for did in pdf["doc_id"]:
                 did = int(did)
                 if did % 2 == 0:
+                    samples = [
+                        media_lcg_value(did, k, 65536) - 32768
+                        for k in range(200 + did % 57)
+                    ]
                     rows.append({"doc_id": did, "mime": "audio/wav",
-                                 "payload": wav_bytes(did)})
+                                 "payload": encode_wav(samples, WAV_RATE)})
                 else:
+                    w, h = 8 + did % 9, 6 + did % 7
+                    logical = bytes(
+                        media_lcg_value(did, i, 256) for i in range(w * h * 3)
+                    )
                     rows.append({"doc_id": did, "mime": "image/bmp",
-                                 "payload": bmp_bytes(did)})
+                                 "payload": encode_bmp(w, h, logical)})
             yield pd.DataFrame(rows)
 
     return docs.select("doc_id").mapInPandas(
@@ -914,40 +906,9 @@ def media_decode_features(with_payload: DataFrame) -> DataFrame:
     RIFF parser, BMP via struct DIB parsing (padding + bottom-up undo) —
     then integer-exact features over the decoded units: unit count
     (samples / pixels), value sum (sum |sample| / sum of channel bytes),
-    value max. Self-contained batch fn (inline copies of the module's
-    decode_wav/decode_bmp — workers must not need this package on their
-    import path; unit tests pin the copies equal)."""
+    value max."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import struct
-        import wave
-
-        def dec_wav(payload: bytes) -> tuple[int, list[int]]:
-            with wave.open(io.BytesIO(payload), "rb") as w:
-                if w.getsampwidth() != 2 or w.getnchannels() != 1:
-                    raise ValueError("only PCM16 mono supported")
-                n = w.getnframes()
-                rate = w.getframerate()
-                frames = w.readframes(n)
-            return rate, list(struct.unpack(f"<{n}h", frames))
-
-        def dec_bmp(payload: bytes) -> tuple[int, int, bytes]:
-            if payload[:2] != b"BM":
-                raise ValueError("not a BMP payload")
-            (offset,) = struct.unpack_from("<I", payload, 10)
-            width, height = struct.unpack_from("<ii", payload, 18)
-            (bpp,) = struct.unpack_from("<H", payload, 28)
-            (compression,) = struct.unpack_from("<I", payload, 30)
-            if bpp != 24 or compression != 0 or height <= 0:
-                raise ValueError("unsupported BMP variant")
-            row_size = (width * 3 + 3) // 4 * 4
-            out = bytearray()
-            for y in range(height):
-                start = offset + (height - 1 - y) * row_size
-                out += payload[start : start + width * 3]
-            return width, height, bytes(out)
-
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -957,7 +918,7 @@ def media_decode_features(with_payload: DataFrame) -> DataFrame:
             ):
                 data = bytes(payload)
                 if mime == "audio/wav":
-                    rate, samples = dec_wav(data)
+                    rate, samples = decode_wav(data)
                     rows.append({
                         "doc_id": int(did), "mime": mime,
                         "n_units": len(samples),
@@ -966,7 +927,7 @@ def media_decode_features(with_payload: DataFrame) -> DataFrame:
                         "rate_or_width": rate,
                     })
                 else:
-                    w, h, px = dec_bmp(data)
+                    w, h, px = decode_bmp(data)
                     rows.append({
                         "doc_id": int(did), "mime": mime,
                         "n_units": w * h,
@@ -1003,43 +964,10 @@ def perceptual_hashes(with_payload: DataFrame) -> DataFrame:
     """(doc_id, width, height, dhash, dhash_twin, dhash_twin_match,
     byte_twin_match) per image payload. Real decode -> integer grid
     resample -> 56-bit dHash, plus the brightness twin's full
-    encode->decode round trip. Self-contained batch fn (inline decoder /
-    encoder copies — workers must not need this package importable;
-    tests pin the copies equal)."""
+    encode->decode round trip."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
-        import struct
-
-        def dec_bmp(payload: bytes) -> tuple[int, int, bytes]:
-            if payload[:2] != b"BM":
-                raise ValueError("not a BMP payload")
-            (offset,) = struct.unpack_from("<I", payload, 10)
-            width, height = struct.unpack_from("<ii", payload, 18)
-            (bpp,) = struct.unpack_from("<H", payload, 28)
-            (compression,) = struct.unpack_from("<I", payload, 30)
-            if bpp != 24 or compression != 0 or height <= 0:
-                raise ValueError("unsupported BMP variant")
-            row_size = (width * 3 + 3) // 4 * 4
-            out = bytearray()
-            for y in range(height):
-                start = offset + (height - 1 - y) * row_size
-                out += payload[start : start + width * 3]
-            return width, height, bytes(out)
-
-        def enc_bmp(w: int, h: int, logical: bytes) -> bytes:
-            row_size = (w * 3 + 3) // 4 * 4
-            pad = b"\x00" * (row_size - w * 3)
-            body = b"".join(
-                logical[y * w * 3 : (y + 1) * w * 3] + pad
-                for y in range(h - 1, -1, -1)
-            )
-            return (
-                b"BM" + struct.pack("<IHHI", 54 + len(body), 0, 0, 54)
-                + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0,
-                              len(body), 2835, 2835, 0, 0)
-                + body
-            )
 
         def grid_grays(w: int, h: int, px: bytes) -> list[list[int]]:
             g = [[0] * PHASH_GX for _ in range(PHASH_GY)]
@@ -1065,10 +993,10 @@ def perceptual_hashes(with_payload: DataFrame) -> DataFrame:
             rows = []
             for did, payload in zip(pdf["doc_id"], pdf["payload"]):
                 data = bytes(payload)
-                w, h, px = dec_bmp(data)
+                w, h, px = decode_bmp(data)
                 twin_logical = bytes(min(255, b + PHASH_SHIFT) for b in px)
-                twin_payload = enc_bmp(w, h, twin_logical)
-                w2, h2, px2 = dec_bmp(twin_payload)
+                twin_payload = encode_bmp(w, h, twin_logical)
+                w2, h2, px2 = decode_bmp(twin_payload)
                 d0 = dhash(grid_grays(w, h, px))
                 d1 = dhash(grid_grays(w2, h2, px2))
                 rows.append({
@@ -1105,71 +1033,9 @@ def synth_png_payloads(docs: DataFrame) -> DataFrame:
     """Deterministic PNG ingestion source: even doc_ids get an 8-bit
     GRAYSCALE PNG (color type 0), odd doc_ids an 8-bit RGB PNG (color
     type 2), both (8 + doc_id%9) x (6 + doc_id%7), pixel stream
-    val(doc_id, i, 256), per-row filter (doc_id + y) % 5. Self-contained
-    batch fn (inline encoder copy — workers must not need this package
-    importable; tests pin the copy equal to encode_png)."""
+    media_lcg_value(doc_id, i, 256), per-row filter (doc_id + y) % 5."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
-        A, B, M = 1_103_515_245, 12_345, 1_000_003
-        P1, P2 = 100_003, 104_729
-
-        def val(doc_id: int, i: int) -> int:
-            return (A * ((doc_id * P1 + i * P2) % M) + B) % 256
-
-        def paeth(a: int, b: int, c: int) -> int:
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            if pa <= pb and pa <= pc:
-                return a
-            if pb <= pc:
-                return b
-            return c
-
-        def enc(width, height, color, logical, doc_id):
-            bpp = 3 if color == 2 else 1
-            stride = width * bpp
-
-            def chunk(ctype, data):
-                return (
-                    struct.pack(">I", len(data)) + ctype + data
-                    + struct.pack(
-                        ">I", zlib.crc32(ctype + data) & 0xFFFFFFFF
-                    )
-                )
-
-            scan = bytearray()
-            prior = bytes(stride)
-            for y in range(height):
-                row = logical[y * stride : (y + 1) * stride]
-                ftype = (doc_id + y) % 5
-                scan.append(ftype)
-                for i in range(stride):
-                    left = row[i - bpp] if i >= bpp else 0
-                    up = prior[i]
-                    ul = prior[i - bpp] if i >= bpp else 0
-                    if ftype == 0:
-                        pred = 0
-                    elif ftype == 1:
-                        pred = left
-                    elif ftype == 2:
-                        pred = up
-                    elif ftype == 3:
-                        pred = (left + up) // 2
-                    else:
-                        pred = paeth(left, up, ul)
-                    scan.append((row[i] - pred) & 0xFF)
-                prior = row
-            ihdr = struct.pack(">IIBBBBB", width, height, 8, color, 0, 0, 0)
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", ihdr)
-                + chunk(b"IDAT", zlib.compress(bytes(scan)))
-                + chunk(b"IEND", b"")
-            )
-
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -1179,11 +1045,14 @@ def synth_png_payloads(docs: DataFrame) -> DataFrame:
                 w, h = 8 + did % 9, 6 + did % 7
                 color = 0 if did % 2 == 0 else 2
                 n = w * h * (3 if color == 2 else 1)
-                logical = bytes(val(did, i) for i in range(n))
+                logical = bytes(media_lcg_value(did, i, 256) for i in range(n))
+                payload = encode_png(
+                    w, h, color, logical,
+                    lambda y, d=did: (d + y) % PNG_FILTER_MOD,
+                )
                 rows.append({
                     "doc_id": did, "mime": "image/png",
-                    "color_type": color,
-                    "payload": enc(w, h, color, logical, did),
+                    "color_type": color, "payload": payload,
                 })
             yield pd.DataFrame(rows)
 
@@ -1197,88 +1066,15 @@ def png_decode_features(with_payload: DataFrame) -> DataFrame:
     """REAL PNG decode inside the Arrow UDF — chunk walk with CRC
     verification, zlib inflate, five-filter unfiltering — then
     integer-exact features over the decoded pixel stream: pixel count,
-    channel-byte sum, channel-byte max, width. Self-contained batch fn
-    (inline decoder copy; tests pin it equal to decode_png)."""
+    channel-byte sum, channel-byte max, width."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
-        def paeth(a: int, b: int, c: int) -> int:
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            if pa <= pb and pa <= pc:
-                return a
-            if pb <= pc:
-                return b
-            return c
-
-        def dec(payload: bytes):
-            if payload[:8] != b"\x89PNG\r\n\x1a\n":
-                raise ValueError("not a PNG payload")
-            pos, width = 8, None
-            idat = bytearray()
-            while pos + 8 <= len(payload):
-                (length,) = struct.unpack_from(">I", payload, pos)
-                if pos + 12 + length > len(payload):
-                    raise ValueError("truncated PNG chunk")
-                ctype = payload[pos + 4 : pos + 8]
-                data = payload[pos + 8 : pos + 8 + length]
-                (crc,) = struct.unpack_from(">I", payload, pos + 8 + length)
-                if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-                    raise ValueError(f"PNG chunk {ctype!r} CRC mismatch")
-                if ctype == b"IHDR":
-                    width, height, depth, color, comp, filt, inter = (
-                        struct.unpack(">IIBBBBB", data)
-                    )
-                    if depth != 8 or color not in (0, 2) or inter != 0 \
-                            or comp != 0 or filt != 0:
-                        raise ValueError("unsupported PNG profile")
-                elif ctype == b"IDAT":
-                    idat += data
-                elif ctype == b"IEND":
-                    break
-                pos += 12 + length
-            if width is None:
-                raise ValueError("PNG missing IHDR")
-            bpp = 3 if color == 2 else 1
-            stride = width * bpp
-            raw = zlib.decompress(bytes(idat))
-            if len(raw) != (stride + 1) * height:
-                raise ValueError("PNG scanline data has wrong length")
-            out = bytearray()
-            prior = bytes(stride)
-            for y in range(height):
-                ftype = raw[y * (stride + 1)]
-                filt = raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)]
-                recon = bytearray(stride)
-                for i in range(stride):
-                    left = recon[i - bpp] if i >= bpp else 0
-                    up = prior[i]
-                    ul = prior[i - bpp] if i >= bpp else 0
-                    if ftype == 0:
-                        pred = 0
-                    elif ftype == 1:
-                        pred = left
-                    elif ftype == 2:
-                        pred = up
-                    elif ftype == 3:
-                        pred = (left + up) // 2
-                    elif ftype == 4:
-                        pred = paeth(left, up, ul)
-                    else:
-                        raise ValueError(f"unknown PNG filter {ftype}")
-                    recon[i] = (filt[i] + pred) & 0xFF
-                out += recon
-                prior = recon
-            return width, height, color, bytes(out)
-
         for pdf in batches:
             if pdf.empty:
                 continue
             rows = []
             for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, color, px = dec(bytes(payload))
+                w, h, color, px = decode_png(bytes(payload))
                 rows.append({
                     "doc_id": int(did),
                     "color_type": color,
@@ -1317,178 +1113,10 @@ def synth_jpeg_payloads(docs: DataFrame) -> DataFrame:
     """Deterministic JPEG ingestion source: even doc_ids get a grayscale
     baseline JPEG, odd doc_ids a YCbCr 4:4:4 color one (chroma constant
     128, so decoded RGB == Y exactly); dimensions 8*(1 + doc_id%3) x
-    8*(1 + doc_id%2); 8x8 block b is constant val(doc_id, b, 256).
-    Self-contained batch fn (inline encoder copy, numpy-vectorized DCT;
-    tests pin payloads byte-identical to encode_jpeg_baseline)."""
+    8*(1 + doc_id%2); 8x8 block b is constant
+    media_lcg_value(doc_id, b, 256)."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-        import struct
-
-        import numpy as np
-
-        A, B, M = 1_103_515_245, 12_345, 1_000_003
-        P1, P2 = 100_003, 104_729
-
-        def val(doc_id: int, i: int) -> int:
-            return (A * ((doc_id * P1 + i * P2) % M) + B) % 256
-
-        ZZ = [
-            0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-            12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-            35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-            58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-        ]
-        DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-        DC_VALS = list(range(12))
-        AC_BITS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 0x7D]
-        AC_VALS = [
-            0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31,
-            0x41, 0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32,
-            0x81, 0x91, 0xA1, 0x08, 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52,
-            0xD1, 0xF0, 0x24, 0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16,
-            0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28, 0x29, 0x2A,
-            0x34, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44, 0x45,
-            0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57,
-            0x58, 0x59, 0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69,
-            0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79, 0x7A, 0x83,
-            0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A, 0x92, 0x93, 0x94,
-            0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-            0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-            0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-            0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8,
-            0xD9, 0xDA, 0xE1, 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8,
-            0xE9, 0xEA, 0xF1, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-            0xF9, 0xFA,
-        ]
-        Q_DC, Q_AC = 8, 16
-
-        def canonical(bits, vals):
-            out, code, k = {}, 0, 0
-            for ln in range(1, 17):
-                for _ in range(bits[ln - 1]):
-                    out[vals[k]] = (code, ln)
-                    code += 1
-                    k += 1
-                code <<= 1
-            return out
-
-        dc_codes = canonical(DC_BITS, DC_VALS)
-        ac_codes = canonical(AC_BITS, AC_VALS)
-        # DCT basis M[u][x] = C(u) cos((2x+1)u pi/16); S = 0.25 M B M^T
-        Mx = np.array(
-            [
-                [
-                    (1 / math.sqrt(2) if u == 0 else 1.0)
-                    * math.cos((2 * x + 1) * u * math.pi / 16)
-                    for x in range(8)
-                ]
-                for u in range(8)
-            ]
-        )
-        qtab = np.full(64, Q_AC, dtype=np.float64)
-        qtab[0] = Q_DC
-
-        def enc(width, height, planes):
-            n_comp = len(planes)
-            out = bytearray()
-            state = {"buf": 0, "cnt": 0}
-
-            def put_bits(code, ln):
-                state["buf"] = (state["buf"] << ln) | (code & ((1 << ln) - 1))
-                state["cnt"] += ln
-                while state["cnt"] >= 8:
-                    byte = (state["buf"] >> (state["cnt"] - 8)) & 0xFF
-                    out.append(byte)
-                    if byte == 0xFF:
-                        out.append(0x00)
-                    state["cnt"] -= 8
-                state["buf"] &= (1 << state["cnt"]) - 1
-
-            def magnitude(v):
-                if v == 0:
-                    return 0, 0
-                a, s = abs(v), 0
-                while a:
-                    a >>= 1
-                    s += 1
-                return s, (v if v >= 0 else v + (1 << s) - 1)
-
-            hdr = bytearray(b"\xff\xd8")
-            hdr += b"\xff\xe0" + struct.pack(">H", 16) \
-                + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-            zz_q = bytes(int(qtab[ZZ[i]]) for i in range(64))
-            hdr += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + zz_q
-            hdr += b"\xff\xc0" + struct.pack(">HB", 8 + 3 * n_comp, 8)
-            hdr += struct.pack(">HH", height, width) + bytes([n_comp])
-            for c in range(n_comp):
-                hdr += bytes([c + 1, 0x11, 0])
-            for cls, bits, vals in (
-                (0, DC_BITS, DC_VALS), (1, AC_BITS, AC_VALS)
-            ):
-                hdr += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-                hdr += bytes([cls << 4]) + bytes(bits) + bytes(vals)
-            hdr += b"\xff\xda" + struct.pack(">H", 6 + 2 * n_comp) \
-                + bytes([n_comp])
-            for c in range(n_comp):
-                hdr += bytes([c + 1, 0x00])
-            hdr += b"\x00\x3f\x00"
-
-            bw, bh = (width + 7) // 8, (height + 7) // 8
-            pred = [0] * n_comp
-            arrs = [
-                np.frombuffer(p, dtype=np.uint8).reshape(height, width)
-                for p in planes
-            ]
-            for by in range(bh):
-                for bx in range(bw):
-                    for c in range(n_comp):
-                        ys = np.minimum(
-                            np.arange(by * 8, by * 8 + 8), height - 1
-                        )
-                        xs = np.minimum(
-                            np.arange(bx * 8, bx * 8 + 8), width - 1
-                        )
-                        blk = arrs[c][np.ix_(ys, xs)].astype(
-                            np.float64
-                        ) - 128.0
-                        S = 0.25 * (Mx @ blk @ Mx.T)
-                        coefs = np.floor(
-                            S.reshape(64) / qtab + 0.5
-                        ).astype(np.int64)
-                        zz = [int(coefs[ZZ[i]]) for i in range(64)]
-                        diff = zz[0] - pred[c]
-                        pred[c] = zz[0]
-                        s, vb = magnitude(diff)
-                        code, ln = dc_codes[s]
-                        put_bits(code, ln)
-                        if s:
-                            put_bits(vb, s)
-                        run = 0
-                        last_nz = max(
-                            (i for i in range(1, 64) if zz[i]), default=0
-                        )
-                        for i in range(1, 64):
-                            if i > last_nz:
-                                code, ln = ac_codes[0x00]
-                                put_bits(code, ln)
-                                break
-                            if zz[i] == 0:
-                                run += 1
-                                continue
-                            while run > 15:
-                                code, ln = ac_codes[0xF0]
-                                put_bits(code, ln)
-                                run -= 16
-                            s, vb = magnitude(zz[i])
-                            code, ln = ac_codes[(run << 4) | s]
-                            put_bits(code, ln)
-                            put_bits(vb, s)
-                            run = 0
-            if state["cnt"]:
-                put_bits((1 << (8 - state["cnt"])) - 1, 8 - state["cnt"])
-            return bytes(hdr) + bytes(out) + b"\xff\xd9"
-
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -1499,7 +1127,7 @@ def synth_jpeg_payloads(docs: DataFrame) -> DataFrame:
                 bw, bh = w // 8, h // 8
                 plane = bytearray(w * h)
                 for b in range(bw * bh):
-                    v = val(did, b)
+                    v = media_lcg_value(did, b, 256)
                     by, bx = divmod(b, bw)
                     for y in range(8):
                         o = (by * 8 + y) * w + bx * 8
@@ -1510,7 +1138,8 @@ def synth_jpeg_payloads(docs: DataFrame) -> DataFrame:
                     planes += [bytes([128] * (w * h))] * 2
                 rows.append({
                     "doc_id": did, "mime": "image/jpeg",
-                    "n_comp": n_comp, "payload": enc(w, h, planes),
+                    "n_comp": n_comp,
+                    "payload": encode_jpeg_baseline(w, h, planes),
                 })
             yield pd.DataFrame(rows)
 
@@ -1531,250 +1160,15 @@ def jpeg_decode_features(with_payload: DataFrame) -> DataFrame:
     """REAL baseline JPEG decode inside the Arrow UDF — marker walk,
     DQT/DHT parsing, Huffman entropy decode with unstuffing, DC
     prediction, dequantize, inverse zigzag, IDCT, YCbCr->RGB for color —
-    then integer-exact features over the decoded pixel stream. The IDCT
-    skips zero coefficients, so the DC-dominant corpus decodes in
-    O(pixels); self-contained batch fn (inline decoder copy; tests pin
-    it equal to decode_jpeg)."""
+    then integer-exact features over the decoded pixel stream."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-        import struct
-
-        import numpy as np
-
-        ZZ = [
-            0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-            12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-            35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-            58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-        ]
-        cos = [
-            [math.cos((2 * x + 1) * u * math.pi / 16) for x in range(8)]
-            for u in range(8)
-        ]
-        cu = [1 / math.sqrt(2)] + [1.0] * 7
-
-        def dec(payload):
-            if payload[:2] != b"\xff\xd8":
-                raise ValueError("not a JPEG payload (missing SOI)")
-            pos = 2
-            qtabs, htabs = {}, {}
-            width = height = None
-            comps, scan_comps = [], []
-            data_start = None
-            while pos + 4 <= len(payload):
-                if payload[pos] != 0xFF:
-                    raise ValueError("bad marker alignment")
-                marker = payload[pos + 1]
-                (seglen,) = struct.unpack_from(">H", payload, pos + 2)
-                if pos + 2 + seglen > len(payload):
-                    raise ValueError("truncated JPEG segment")
-                seg = payload[pos + 4 : pos + 2 + seglen]
-                if marker == 0xDB:
-                    p = 0
-                    while p < len(seg):
-                        pq, tq = seg[p] >> 4, seg[p] & 0x0F
-                        if pq != 0:
-                            raise ValueError("16-bit quant unsupported")
-                        zzq = seg[p + 1 : p + 65]
-                        tab = [0] * 64
-                        for i in range(64):
-                            tab[ZZ[i]] = zzq[i]
-                        qtabs[tq] = tab
-                        p += 65
-                elif marker == 0xC4:
-                    p = 0
-                    while p < len(seg):
-                        cls, tid = seg[p] >> 4, seg[p] & 0x0F
-                        bits = list(seg[p + 1 : p + 17])
-                        n = sum(bits)
-                        vals = list(seg[p + 17 : p + 17 + n])
-                        dmap, code, k = {}, 0, 0
-                        for ln in range(1, 17):
-                            for _ in range(bits[ln - 1]):
-                                dmap[(ln, code)] = vals[k]
-                                code += 1
-                                k += 1
-                            code <<= 1
-                        htabs[(cls, tid)] = dmap
-                        p += 17 + n
-                elif marker == 0xC0:
-                    if seg[0] != 8:
-                        raise ValueError("only 8-bit precision supported")
-                    height, width = struct.unpack_from(">HH", seg, 1)
-                    nc = seg[5]
-                    if nc not in (1, 3):
-                        raise ValueError("only 1/3-component supported")
-                    for c in range(nc):
-                        cid, samp, tq = seg[6 + 3 * c : 9 + 3 * c]
-                        if samp != 0x11:
-                            raise ValueError("subsampling unsupported")
-                        comps.append((cid, samp, tq))
-                elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9,
-                                0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-                    raise ValueError("only baseline (SOF0) supported")
-                elif marker == 0xDD:
-                    (ri,) = struct.unpack_from(">H", seg, 0)
-                    if ri != 0:
-                        raise ValueError("restart intervals unsupported")
-                elif marker == 0xDA:
-                    ns = seg[0]
-                    for c in range(ns):
-                        cs, tt = seg[1 + 2 * c], seg[2 + 2 * c]
-                        idx = next(
-                            i for i, (cid, _, _) in enumerate(comps)
-                            if cid == cs
-                        )
-                        scan_comps.append((idx, tt >> 4, tt & 0x0F))
-                    data_start = pos + 2 + seglen
-                    break
-                pos += 2 + seglen
-            if width is None or data_start is None:
-                raise ValueError("JPEG missing SOF0/SOS")
-
-            st = {"pos": data_start, "cnt": 0, "buf": 0}
-
-            def read_bit():
-                if st["cnt"] == 0:
-                    if st["pos"] >= len(payload):
-                        raise ValueError("truncated entropy data")
-                    byte = payload[st["pos"]]
-                    st["pos"] += 1
-                    if byte == 0xFF:
-                        if st["pos"] >= len(payload):
-                            raise ValueError("truncated entropy data")
-                        if payload[st["pos"]] == 0x00:
-                            st["pos"] += 1
-                        else:
-                            raise ValueError("marker in entropy data")
-                    st["buf"], st["cnt"] = byte, 8
-                st["cnt"] -= 1
-                return (st["buf"] >> st["cnt"]) & 1
-
-            def huff_decode(tab):
-                code = 0
-                for ln in range(1, 17):
-                    code = (code << 1) | read_bit()
-                    sym = tab.get((ln, code))
-                    if sym is not None:
-                        return sym
-                raise ValueError("invalid Huffman code")
-
-            def receive_extend(s):
-                if s == 0:
-                    return 0
-                v = 0
-                for _ in range(s):
-                    v = (v << 1) | read_bit()
-                return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-            nc = len(comps)
-            bw, bh = (width + 7) // 8, (height + 7) // 8
-            # Entropy decode stays sequential Python (a Huffman bitstream
-            # has no batch form), but it now only COLLECTS the zigzag
-            # coefficient vectors; dequant + inverse zigzag + IDCT +
-            # level shift run vectorized over ALL blocks of a component
-            # below (round-12 verdict item 3: the per-pixel Python
-            # quadruple loop was 4096 truthiness checks per block and
-            # the dominant decode cost). Bit-exactness: every numpy step
-            # mirrors the scalar code's operation order — see the IDCT
-            # comment below.
-            comp_zz: list[list[list[int]]] = [[] for _ in range(nc)]
-            pred = [0] * nc
-            for _by in range(bh):
-                for _bx in range(bw):
-                    for ci, dc_id, ac_id in scan_comps:
-                        dct = htabs.get((0, dc_id))
-                        act = htabs.get((1, ac_id))
-                        if dct is None or act is None \
-                                or qtabs.get(comps[ci][2]) is None:
-                            raise ValueError("missing Huffman/quant table")
-                        zz = [0] * 64
-                        s = huff_decode(dct)
-                        pred[ci] += receive_extend(s)
-                        zz[0] = pred[ci]
-                        i = 1
-                        while i < 64:
-                            rs = huff_decode(act)
-                            run, size = rs >> 4, rs & 0x0F
-                            if size == 0:
-                                if run == 15:
-                                    i += 16
-                                    continue
-                                break
-                            i += run
-                            if i > 63:
-                                raise ValueError("AC index overflow")
-                            zz[i] = receive_extend(size)
-                            i += 1
-                        comp_zz[ci].append(zz)
-
-            zz_nat = np.array(ZZ, dtype=np.int64)  # zigzag -> natural
-            cu_np = np.array(cu)
-            cos_np = np.array(cos)  # cos_np[u, x], doubles identical
-            planes = []
-            for ci in range(nc):
-                qt = qtabs[comps[ci][2]]
-                zz_arr = np.array(comp_zz[ci], dtype=np.int64).reshape(-1, 64)
-                n_blk = zz_arr.shape[0]
-                # coefs[ZZ[i]] = zz[i] * qt[ZZ[i]] — integer, exact
-                qt_nat = np.array(qt, dtype=np.int64)
-                coefs = np.zeros((n_blk, 64), dtype=np.float64)
-                coefs[:, zz_nat] = (zz_arr * qt_nat[zz_nat][None, :]).astype(
-                    np.float64
-                )
-                # IDCT, bit-identical to the scalar loop: accumulate over
-                # the 64 (v, u) positions IN THE SAME ORDER with
-                # element-wise ops only (each partial product keeps the
-                # scalar code's left association; element-wise IEEE adds
-                # in a fixed order are exactly the scalar sums; an
-                # all-zero position contributes exactly +-0.0 and is
-                # skipped, which cannot change any partial sum — no
-                # matmul/einsum, whose reassociation could flip a
-                # floor(x + 0.5) boundary pixel).
-                acc = np.zeros((n_blk, 8, 8), dtype=np.float64)
-                for idx in np.flatnonzero(coefs.any(axis=0)):
-                    v, u = divmod(int(idx), 8)
-                    t = (cu_np[u] * cu_np[v]) * coefs[:, idx]
-                    t = t[:, None, None] * cos_np[u][None, None, :]
-                    t = t * cos_np[v][None, :, None]
-                    acc += t
-                valp = np.floor((0.25 * acc) + 0.5 + 1024.0).astype(
-                    np.int64
-                ) - 1024 + 128
-                # (scalar int() truncates toward zero where floor rounds
-                # down, but they differ only for negative arguments,
-                # which clamp to 0 under both conventions)
-                blocks = np.clip(valp, 0, 255).astype(np.uint8)
-                planes.append(
-                    blocks.reshape(bh, bw, 8, 8)
-                    .transpose(0, 2, 1, 3)
-                    .reshape(bh * 8, bw * 8)
-                )
-            if nc == 1:
-                px = planes[0][:height, :width]
-                return width, height, 1, px.tobytes()
-            # YCbCr -> RGB with the scalar code's exact association:
-            # ((yy + (k * c)) + 0.5) + 1024, floor, clamp — element-wise
-            yy = planes[0][:height, :width].astype(np.float64)
-            cb = planes[1][:height, :width].astype(np.float64) - 128.0
-            cr = planes[2][:height, :width].astype(np.float64) - 128.0
-            r = np.floor((yy + (1.402 * cr)) + 0.5 + 1024.0) - 1024.0
-            g = np.floor(
-                ((yy - (0.344136 * cb)) - (0.714136 * cr)) + 0.5 + 1024.0
-            ) - 1024.0
-            b = np.floor((yy + (1.772 * cb)) + 0.5 + 1024.0) - 1024.0
-            rgb = np.clip(
-                np.stack((r, g, b), axis=-1), 0.0, 255.0
-            ).astype(np.uint8)
-            return width, height, 3, rgb.tobytes()
-
         for pdf in batches:
             if pdf.empty:
                 continue
             rows = []
             for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, nc, px = dec(bytes(payload))
+                w, h, nc, px = decode_jpeg(bytes(payload))
                 rows.append({
                     "doc_id": int(did),
                     "n_comp": nc,

@@ -3276,12 +3276,12 @@ def _pf_pairs_from(
 # ---------------------------------------------------------------------------
 
 _DUCK_VERIFIED_PRELUDE = f"""{_DUCK_CAND_CTE},
-    d AS (
+    d AS MATERIALIZED (
       SELECT doc_id, {token_ngrams_expr("text", 3)[1]} AS tg
       FROM documents
       WHERE len(string_split(text, ' ')) >= 3
     ),
-    verified AS (
+    verified AS MATERIALIZED (
       SELECT c.doc_a, c.doc_b
       FROM cand c JOIN d a ON a.doc_id = c.doc_a JOIN d b ON b.doc_id = c.doc_b
       WHERE CAST(len(list_intersect(a.tg, b.tg)) AS DOUBLE)
@@ -3300,8 +3300,10 @@ def _kcore_duck_rounds() -> str:
         steps.append(f"""
     deg{r} AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS deg
                FROM {prev} GROUP BY src),
-    keep{r} AS (SELECT src AS node FROM deg{r} WHERE deg >= {KCORE_K}),
-    e{r} AS (
+    keep{r} AS MATERIALIZED (
+      SELECT src AS node FROM deg{r} WHERE deg >= {KCORE_K}
+    ),
+    e{r} AS MATERIALIZED (
       SELECT e.src, e.dst FROM {prev} e
       JOIN keep{r} ka ON ka.node = e.src
       JOIN keep{r} kb ON kb.node = e.dst
@@ -3314,7 +3316,7 @@ def _kcore_duck_rounds() -> str:
     "q208_kcore_decomposition",
     oracle=f"""
     WITH {_DUCK_VERIFIED_PRELUDE},
-    e0 AS (
+    e0 AS MATERIALIZED (
       SELECT doc_a AS src, doc_b AS dst FROM verified
       UNION ALL
       SELECT doc_b AS src, doc_a AS dst FROM verified
@@ -4626,7 +4628,12 @@ def _pf_index_buckets(sf_dir: str) -> int:
 
     env = _os.environ.get("SPARK_GRAFT_PF_BUCKETS")
     if env:
-        return max(1, int(env))
+        try:
+            return max(1, int(env))
+        except ValueError:
+            raise ValueError(
+                f"SPARK_GRAFT_PF_BUCKETS must be an integer, got {env!r}"
+            ) from None
     from ..sources.testdata import _dir_bytes
 
     nbytes = _dir_bytes(_os.path.join(sf_dir, "documents.parquet"))

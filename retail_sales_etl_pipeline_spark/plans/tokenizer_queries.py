@@ -1288,7 +1288,7 @@ def _bpe_oracle_ctes() -> list[str]:
         FROM documents WHERE text IS NOT NULL
       ) WHERE length(w) >= 1 AND NOT contains(w, '{s}') GROUP BY w
     )""",
-        f"""seg0 AS (
+        f"""seg0 AS MATERIALIZED (
       SELECT list_aggregate(string_split(w, ''), 'string_agg', '{s}')
                  AS seg,
              freq
@@ -1303,12 +1303,12 @@ def _bpe_oracle_ctes() -> list[str]:
             FROM seg{k - 1} WHERE len(string_split(seg, '{s}')) >= 2),
            unnest(range(1, len(ls))) AS t(i)
     )""")
-        ctes.append(f"""w{k} AS (
+        ctes.append(f"""w{k} AS MATERIALIZED (
       SELECT left_sym, right_sym, CAST(SUM(freq) AS BIGINT) AS cnt
       FROM p{k} GROUP BY left_sym, right_sym
       ORDER BY cnt DESC, left_sym, right_sym LIMIT 1
     )""")
-        ctes.append(f"""seg{k} AS (
+        ctes.append(f"""seg{k} AS MATERIALIZED (
       SELECT {duck_fold} AS seg, s.freq
       FROM seg{k - 1} s CROSS JOIN w{k} w
     )""")

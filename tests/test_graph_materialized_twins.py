@@ -4,6 +4,8 @@ checkpoint must be paid once per (session, corpus)."""
 
 from __future__ import annotations
 
+import pytest
+
 from retail_sales_etl_pipeline_spark.plans import dedup_queries as dq
 
 SF = "/root/testdata/sf0.001"
@@ -129,7 +131,7 @@ def test_single_dag_cutover_is_lossless(spark, monkeypatch):
 
 def test_pf_index_buckets_adaptive(monkeypatch, tmp_path):
     """Round-13: the bucket count follows corpus bytes (8 at test scale,
-    power-of-two growth, 1024 cap), falls back to the conservative
+    power-of-two growth, PF_BUCKET_MAX cap), falls back to the conservative
     default when the size is unknowable (remote URI), and honors the
     operator override env."""
     monkeypatch.delenv("SPARK_GRAFT_PF_BUCKETS", raising=False)
@@ -143,6 +145,14 @@ def test_pf_index_buckets_adaptive(monkeypatch, tmp_path):
     assert dq._pf_index_buckets(str(tmp_path)) == 8
     monkeypatch.setenv("SPARK_GRAFT_PF_BUCKETS", "128")
     assert dq._pf_index_buckets(str(tmp_path)) == 128
+
+
+def test_pf_buckets_env_must_be_an_integer(monkeypatch):
+    """A malformed override fails with an error naming the variable,
+    not a bare int() traceback."""
+    monkeypatch.setenv("SPARK_GRAFT_PF_BUCKETS", "64x")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_PF_BUCKETS"):
+        dq._pf_index_buckets(SF)
 
 
 def test_prefix_index_survives_stale_warehouse_location(spark):

@@ -59,12 +59,24 @@ def test_driver_cutover_equals_distributed_path(spark, monkeypatch):
         for r in q157_incremental_components(spark, SF_SMALL).collect()
     }
     monkeypatch.setattr(graph, "CC_SMALL_GRAPH_MAX_EDGES", 0)
+    # record each CC invocation's stats: the forcing is only real if the
+    # operator's own cutover reads the patched bound too
+    cc_stats: list[dict] = []
+    real_cc = graph.connected_components
+
+    def cc_with_stats(*args, **kwargs):
+        cc_stats.append({})
+        return real_cc(*args, stats=cc_stats[-1], **kwargs)
+
+    monkeypatch.setattr(graph, "connected_components", cc_with_stats)
     slow = {
         (r.doc_id, r.component_id)
         for r in q157_incremental_components(spark, SF_SMALL).collect()
     }
     assert fast == slow
     assert fast
+    # base CC over old-old edges, then merge CC over the contracted graph
+    assert [st["algorithm"] for st in cc_stats] == ["star", "star"]
 
     # the Spark-remainder helper matches SQL % for negative ids too
     assert dq._py_rem(-10, 7) == -3 and dq._py_rem(10, 7) == 3
